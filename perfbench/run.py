@@ -2,11 +2,14 @@
 """Build and run the catlasspark benchmark.
 
     python3 perfbench/run.py --workload screen --seed 1 --seconds 6 --trace 0
+    python3 perfbench/run.py --make-manifest
 
 Run from the root of a checkout. The first run compiles the engine and the
 benchmark with sbt (offline) into the checkout; later runs reuse that build
 while the sources are unchanged. Each run starts from an empty work
 directory and prints one JSON result as its last stdout line.
+`--make-manifest` rewrites the registry workload's expected outputs
+(perfbench/manifest.tsv) from the engine beside it.
 """
 
 import argparse
@@ -22,6 +25,8 @@ HERE = pathlib.Path(__file__).resolve().parent
 ROOT = HERE.parent
 BUILD = ROOT / ".bench_build"
 LAUNCH = BUILD / "launch.args"
+CORPUS = HERE / "corpus"
+MANIFEST = HERE / "manifest.tsv"
 STAMP = BUILD / "stamp"
 
 BUILD_TIMEOUT_S = 600
@@ -87,8 +92,9 @@ def main():
     ap.add_argument("--seed", type=int, default=1)
     ap.add_argument("--seconds", type=int, default=20)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
+    ap.add_argument("--make-manifest", action="store_true")
     args = ap.parse_args()
-    if not args.workload:
+    if not args.workload and not args.make_manifest:
         ap.error("--workload is required")
 
     # the benchmark measures the engine beside it; without it there is nothing to run
@@ -101,12 +107,16 @@ def main():
     (work / "tmp").mkdir(parents=True)
     launch = LAUNCH.read_text().splitlines()
     env = dict(os.environ, SPARK_LOCAL_DIRS=str(work / "spark-local"))
-    cmd = (["java", HEAP, f"-Djava.io.tmpdir={work / 'tmp'}"] + launch +
-           ["graft.perfbench.Main",
-            "--workload", args.workload,
-            "--seed", str(args.seed), "--seconds", str(args.seconds),
-            "--trace", str(args.trace), "--work", str(work),
-            "--spec", str(ROOT / "BENCHMARK.json")])
+    jvm = ["java", HEAP, f"-Djava.io.tmpdir={work / 'tmp'}"] + launch
+    if args.make_manifest:
+        cmd = jvm + ["graft.perfbench.MakeManifest", str(CORPUS), str(work), str(MANIFEST)]
+    else:
+        cmd = jvm + ["graft.perfbench.Main",
+                     "--workload", args.workload,
+                     "--seed", str(args.seed), "--seconds", str(args.seconds),
+                     "--trace", str(args.trace), "--work", str(work),
+                     "--spec", str(ROOT / "BENCHMARK.json"),
+                     "--corpus", str(CORPUS), "--manifest", str(MANIFEST)]
     code, out = run_group(cmd, RUN_TIMEOUT_S, cwd=ROOT, env=env,
                           stdout=subprocess.PIPE, stdin=subprocess.DEVNULL, text=True)
     lines = out.strip().splitlines()

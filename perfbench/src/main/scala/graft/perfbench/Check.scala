@@ -37,12 +37,7 @@ object Check {
       if (d.isNaN || d.isInfinite) d.toString
       else if (d == 0.0) "0" // -0.0 and 0.0 are one value
       else new java.math.BigDecimal(d).round(mc).stripTrailingZeros.toString
-    case f: Float => render(f.toDouble)
-    case b: java.math.BigDecimal => render(b.doubleValue)
-    case bs: Array[Byte] => bs.map(b => f"$b%02x").mkString("0x", "", "")
     case r: Row => r.toSeq.map(render).mkString("(", ",", ")")
-    case m: scala.collection.Map[_, _] =>
-      m.map { case (k, x) => render(k) + "->" + render(x) }.toSeq.sorted.mkString("{", ",", "}")
     case s: scala.collection.Seq[_] => s.map(render).sorted.mkString("[", ",", "]")
     case other => other.toString
   }

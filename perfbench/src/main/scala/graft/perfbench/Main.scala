@@ -12,8 +12,8 @@ import graft.Sessions
   * checkout-relative paths; see `perfbench/NOTES.md` for the workloads.
   *
   * A run: start one Spark session, set up three times and report the
-  * median; check the outputs once, untimed, which also warms the JIT; then
-  * time passes over the workload's fixed work until `--seconds` have been
+  * median; check the outputs once, untimed, which also warms the JIT; run
+  * one more untimed pass to warm up; then time passes over the workload's fixed work until `--seconds` have been
   * measured. With `--trace 1` the window is split: the first half
   * untraced, the second half traced, and the gap between their median
   * passes is the tracing overhead. The last stdout line is the result.
@@ -21,23 +21,30 @@ import graft.Sessions
 object Main {
 
   case class Args(workload: String, seed: Long, seconds: Double, trace: Boolean,
-                  work: Path, spec: Path)
+                  work: Path, spec: Path, corpus: Path, manifest: Path)
 
-  val workloads = Seq("screen", "memo")
+  val workloads = Seq("screen", "registry")
 
-  /** Bulks in the screen workload: enumeration and inference take about
-    * half a pass, fixed plan and job costs the rest, and a run with its
-    * warm-up stays near a minute on four cores.
+  /** Bulks in the screen workload: a run with its warm-up stays under a
+    * minute on four cores.
     */
-  val screenBulks = 200
+  val screenBulks = 100
 
+  /** Set-up repetitions; `setup_s` is their median. */
   val setupReps = 3
+
+  /** Untimed passes between the output check and the timed ones: the
+    * check makes each call for the first time, and the next pass still
+    * runs about a quarter slower than the ones after it.
+    */
+  val warmupPasses = 1
 
   def parse(argv: Array[String]): Args = {
     val m = argv.grouped(2).collect { case Array(k, v) if k.startsWith("--") => k.drop(2) -> v }.toMap
     def req(k: String) = m.getOrElse(k, throw new IllegalArgumentException(s"missing --$k"))
     val a = Args(req("workload"), req("seed").toLong, req("seconds").toDouble,
-      req("trace") == "1", Paths.get(req("work")), Paths.get(req("spec")))
+      req("trace") == "1", Paths.get(req("work")), Paths.get(req("spec")),
+      Paths.get(req("corpus")), Paths.get(req("manifest")))
     require(workloads.contains(a.workload),
       s"unknown workload ${a.workload} (known: ${workloads.mkString(", ")})")
     require(a.seconds > 0, "--seconds must be positive")
@@ -46,16 +53,20 @@ object Main {
 
   val cores: Int = Runtime.getRuntime.availableProcessors
 
-  def session(a: Args): SparkSession = {
+  def session(work: Path): SparkSession = {
     val s = Sessions.builder(s"local[$cores]", cores.toString)
-      .config("spark.local.dir", a.work.resolve("spark-local").toString)
+      .config("spark.local.dir", work.resolve("spark-local").toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
   }
 
   def workload(a: Args): Workload = a.workload match {
-    case w => new Screen(a.seed, screenBulks, a.work, memo = w == "memo")
+    case "screen" => new Screen(a.seed, screenBulks, a.work)
+    case "registry" =>
+      // SharedBase times each build, its jobs forced, only under this flag
+      System.setProperty("graft.bench.timeBuilds", "1")
+      new Registry(a.corpus, a.seed, a.work, Registry.readManifest(a.manifest))
   }
 
   def main(argv: Array[String]): Unit = {
@@ -84,17 +95,23 @@ object Main {
   def run(a: Args): String = {
     val spec = Json.read(a.spec)
     val w = workload(a)
-    val spark = session(a)
-    val setups = (1 to setupReps).map(_ => Workload.seconds(w.setup(spark))._2)
+    val spark = session(a.work)
+    val setups = (1 to setupReps).map(rep => Workload.seconds(w.setup(spark, rep))._2)
     log(f"setup ${setups.map(s => f"$s%.2f").mkString(" ")} s")
     val (checkFailures, checkSecs) = Workload.seconds {
       try w.check(spark) catch { case e: Exception => Seq(s"output check failed: $e") }
     }
     log(f"output check $checkSecs%.2f s, ${checkFailures.size} failed")
     val trace = new Trace(spark)
+    val warmup = (1 to warmupPasses).map { i =>
+      val p = w.pass(spark, trace, i)
+      log(f"warm-up pass $i ${p.wall}%.2f s")
+      p
+    }
 
-    // one pass per half when tracing splits the window
-    val minPasses = if (a.trace) 1 else w.minPasses
+    // the fewest passes whose median one slow pass cannot set; one per
+    // half when tracing splits the window
+    val minPasses = if (a.trace) 1 else 3
     def timedPasses(budget: Double, first: Int): Seq[Pass] = {
       val out = Seq.newBuilder[Pass]
       var spent = 0.0
@@ -106,28 +123,26 @@ object Main {
       }
       out.result()
     }
-    val untraced = timedPasses(if (a.trace) a.seconds / 2 else a.seconds, 1)
+    val untraced = timedPasses(if (a.trace) a.seconds / 2 else a.seconds, 1 + warmupPasses)
     val heap = heapMb()
     val (traced, counters) = if (!a.trace) (Nil, Map.empty[String, Double]) else {
       trace.start()
       trace.on = true
       val before = trace.snapshot()
-      val ps = trace.span("run", a.workload)(timedPasses(a.seconds / 2, 1 + untraced.size))
+      val ps = trace.span("run", a.workload)(timedPasses(a.seconds / 2, 1 + warmupPasses + untraced.size))
       val after = trace.snapshot()
       trace.on = false
       trace.stop()
       (ps, after.map { case (k, v) => k -> (v - before.getOrElse(k, 0.0)) / ps.size })
     }
-    val failures = checkFailures ++ (untraced ++ traced).flatMap(_.failures)
+    val failures = checkFailures ++ (warmup ++ untraced ++ traced).flatMap(_.failures)
     failures.foreach(f => log(s"FAILED $f"))
-    val attempted = (untraced ++ traced).map(_.attempted).sum
+    val attempted = (warmup ++ untraced ++ traced).map(_.attempted).sum
 
     val values: Map[String, Double] = if (!a.trace) {
       Map(
         "setup_s" -> Stats.median(setups),
         "run_s" -> Stats.median(untraced.map(_.wall)),
-        "items_per_s" -> Stats.median(untraced.map(p => p.items / p.itemSeconds)),
-        "op_gmean_s" -> Stats.gmeanOfMedians(untraced.map(_.ops)),
         "heap_retained_mb" -> heap)
     } else {
       val runS = Stats.median(traced.map(_.wall))

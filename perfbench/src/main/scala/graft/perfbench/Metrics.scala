@@ -6,7 +6,7 @@ package graft.perfbench
 object Metrics {
 
   /** Printed by untraced runs, on every workload. */
-  val endToEnd: Seq[String] = Seq("setup_s", "run_s", "items_per_s", "op_gmean_s", "heap_retained_mb")
+  val endToEnd: Seq[String] = Seq("setup_s", "run_s", "heap_retained_mb")
 
   /** Printed by traced runs, on every workload: a layer the workload does
     * not exercise reads 0.
@@ -19,7 +19,10 @@ object Metrics {
       Seq("config_s", "compile_s", "sink_s", "ledger_wait_s", "screen_s", "enumerate_s",
         "bulks", "surfaces", "adslabs", "scored_cheap", "scored_expensive").map("domain." + _) ++
       Seq("cold_s", "warm_s", "computed_rows_cold", "computed_rows_warm", "hit_ratio_warm",
-        "files", "mb").map("memo." + _) :+
+        "files", "mb").map("memo." + _) ++
+      Registry.packNames.map("queries.pack_s." + _) ++
+      Registry.hot.map("queries.query_s." + _) ++
+      Registry.bases.map("ops.build_s." + _) :+
       "trace.overhead_s"
 
   def names(trace: Boolean): Seq[String] = if (trace) perLayer else endToEnd

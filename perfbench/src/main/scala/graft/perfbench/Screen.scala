@@ -9,19 +9,13 @@ import scala.collection.parallel.CollectionConverters._
 import graft.domain._
 import Workload.{seconds, sink}
 
-/** The paper's own workload over seeded synthetic bulks, in two parts
-  * that stress different layers. `memo = false`: a catlas screen from
-  * config to result and ledger. `memo = true`: the memo cache's write path
-  * (cold: every key computed and appended) and read path (warm: nothing
-  * computed) over the screen's adslab table. Both share the set-up and the
-  * output check.
+/** The paper's own workload over seeded synthetic bulks. A pass runs the
+  * catlas screen from config to result and ledger, then the memo cache's
+  * write path (cold: every key computed and appended) and read path (warm:
+  * nothing computed) over the screen's adslab table, for the expensive
+  * inference label, the one a re-run would not want to pay twice.
   */
-final class Screen(seed: Long, nBulks: Int, work: Path, memo: Boolean) extends Workload {
-
-  /** The memo path keeps warming for a few passes; a median of three sets
-    * the slowest aside.
-    */
-  override val minPasses: Int = if (memo) 3 else 2
+final class Screen(seed: Long, nBulks: Int, work: Path) extends Workload {
 
   private val configJson: String =
     """{
@@ -38,18 +32,23 @@ final class Screen(seed: Long, nBulks: Int, work: Path, memo: Boolean) extends W
     }"""
   private val cfg = Config.fromJson(configJson, Map.empty)
   private val labels = Seq("cheap", "expensive")
+  private val memoLabel = "expensive"
 
   private val bulkPath = work.resolve("bulks").toString
   private val adslabPath = work.resolve("adslabs").toString
 
   private var bulkDs: Dataset[Bulk] = _
+  /** The screen's adslab table, keyed `surface_key|adsorbate_smiles`. */
   private var memoInput: DataFrame = _
+  private var memoKeys = 0L
   /** The memo passes' own observation point: rows each `through` computed. */
   private var memoLedger: Pipeline.Ledger = _
   private val stageCounts = scala.collection.mutable.Map.empty[String, Long]
+  private var enumerateSeconds = 0.0
+  private var scoredCounts = Map.empty[String, Double]
 
   /** The bulks, generated and written as the screen's parquet input. */
-  def setup(spark: SparkSession): Unit = {
+  def setup(spark: SparkSession, rep: Int): Unit = {
     import spark.implicits._
     spark.createDataset(BulkGen.bulks(seed, nBulks)).write.mode("overwrite").parquet(bulkPath)
     bulkDs = spark.read.parquet(bulkPath).as[Bulk]
@@ -84,18 +83,15 @@ final class Screen(seed: Long, nBulks: Int, work: Path, memo: Boolean) extends W
   }
 
   /** A cold pass computes every key; a warm pass over the same root none. */
-  private def memoFailures(phase: String, label: String, rows: Long): Option[String] = {
-    val want = if (phase == "memo_cold") memoKeys else 0L
-    if (rows == want) None else Some(s"$phase ($label) computed $rows rows, expected $want")
+  private def memoFailures(phase: String, rows: Long): Option[String] = {
+    val want = if (phase == "cold") memoKeys else 0L
+    if (rows == want) None else Some(s"memo $phase computed $rows rows, expected $want")
   }
 
   def pass(spark: SparkSession, trace: Trace, index: Int): Pass = {
-    val root = work.resolve(s"memo/pass-$index")
-    deleteTree(root)
     val parts = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    val ops = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     val failures = Seq.newBuilder[String]
-    if (!memo) trace.span("phase", "screen") {
+    trace.span("phase", "screen") {
       val (c, tConfig) = seconds(Config.fromJson(configJson, Map.empty))
       val (res, tCompile) = seconds(Pipeline.compile(spark, c, Some(bulkDs)))
       val (_, tSink) = seconds(sink(res.results))
@@ -107,33 +103,22 @@ final class Screen(seed: Long, nBulks: Int, work: Path, memo: Boolean) extends W
         "domain.sink_s" -> tSink, "domain.ledger_wait_s" -> tLedger,
         "domain.screen_s" -> (tConfig + tCompile + tSink + tLedger))
     }
-    if (memo) for ((phase, key) <- Seq("memo_cold" -> "memo.cold_s", "memo_warm" -> "memo.warm_s"))
-      trace.span("phase", phase) {
-        parts(key) = labels.map { label =>
-          val (secs, rows, _) =
-            trace.span("op", s"$phase/$label")(memoPass(spark, root.toString, label))
-          failures ++= memoFailures(phase, label, rows)
-          parts(s"$key.rows_$label") = rows.toDouble
-          ops(s"$phase/$label") = secs
-          secs
-        }.sum
-      }
-    if (memo) {
-      // what the memo root holds once both passes ran
-      val files = listFiles(root)
-      parts("memo.files") = files.count(_.getFileName.toString.endsWith(".parquet")).toDouble
-      parts("memo.mb") = files.map(Files.size).sum / 1e6
-    } else ops("screen") = parts("domain.screen_s")
-    // items: adslabs scored by the screen, or rows the memo calls served
-    val items = if (memo) (memoKeys * ops.size).toDouble
-      else stageCounts.getOrElse("adslab_00_enumerated", 0L).toDouble
-    Pass(ops.values.sum, ops.toMap, parts.toMap, items, ops.values.sum,
-      attempted = ops.size, failures.result())
+    val root = work.resolve(s"memo/pass-$index")
+    deleteTree(root)
+    for (phase <- Seq("cold", "warm")) {
+      val (secs, rows, _) =
+        trace.span("phase", s"memo_$phase")(memoPass(spark, root.toString, memoLabel))
+      failures ++= memoFailures(phase, rows)
+      parts(s"memo.${phase}_s") = secs
+      parts(s"memo.computed_rows_$phase") = rows.toDouble
+    }
+    // what the memo root holds once both passes ran
+    val files = listFiles(root)
+    parts("memo.files") = files.count(_.getFileName.toString.endsWith(".parquet")).toDouble
+    parts("memo.mb") = files.map(Files.size).sum / 1e6
+    Pass(parts("domain.screen_s") + parts("memo.cold_s") + parts("memo.warm_s"), parts.toMap,
+      attempted = 3, failures.result())
   }
-
-  private var memoKeys = 0L
-  private var enumerateSeconds = 0.0
-  private var scoredCounts = Map.empty[String, Double]
 
   def check(spark: SparkSession): Seq[String] = {
     val bad = Seq.newBuilder[String]
@@ -153,7 +138,7 @@ final class Screen(seed: Long, nBulks: Int, work: Path, memo: Boolean) extends W
     val steps = Predict.countSteps(results, labels).head()
     scoredCounts = labels.map(l => s"domain.scored_$l" -> steps.getAs[Long](s"n_scored_$l").toDouble).toMap
 
-    // the memo passes run over the screen's adslab table
+    // the memo passes' input: the screen's adslab table, materialized
     results.select("surface_key", "adsorbate_smiles", "adslab_configs")
       .write.mode("overwrite").parquet(adslabPath)
     results.unpersist()
@@ -161,19 +146,20 @@ final class Screen(seed: Long, nBulks: Int, work: Path, memo: Boolean) extends W
       .withColumn("memo_key", concat_ws("|", col("surface_key"), col("adsorbate_smiles")))
       .withColumn("filter_reason", lit(null).cast("string"))
     memoKeys = memoInput.select("memo_key").distinct().count()
-    // the memo workload's own check, which also warms its path: both passes
-    // answer from the one table the cold pass wrote, so the warm answer
-    // checks the cold writes too; it must be what un-memoized inference says
-    if (memo) for (label <- labels) {
-      val root = work.resolve("memo/check").toString
-      val direct = Check.digest(scored(memoInput.withColumnRenamed("memo_key", "key"), label))
-      val (_, coldRows, _) = memoPass(spark, root, label)
-      bad ++= memoFailures("memo_cold", label, coldRows)
-      val (_, warmRows, out) = memoPass(spark, root, label)
-      bad ++= memoFailures("memo_warm", label, warmRows)
-      val got = Check.digest(out)
-      if (got != direct) bad += s"memo ($label) $got differs from direct inference $direct"
-    }
+    if (memoKeys != got.rows)
+      bad += s"the memo table has $memoKeys keys but the result has ${got.rows} rows"
+
+    // both memo passes answer from the one table the cold pass wrote, so
+    // the warm answer checks the cold writes too; it must be what
+    // un-memoized inference says
+    val root = work.resolve("memo/check").toString
+    val direct = Check.digest(scored(memoInput.withColumnRenamed("memo_key", "key"), memoLabel))
+    val (_, coldRows, _) = memoPass(spark, root, memoLabel)
+    bad ++= memoFailures("cold", coldRows)
+    val (_, warmRows, out) = memoPass(spark, root, memoLabel)
+    bad ++= memoFailures("warm", warmRows)
+    val memoGot = Check.digest(out)
+    if (memoGot != direct) bad += s"memo $memoGot differs from direct inference $direct"
     Main.log(s"screen seed=$seed bulks=$nBulks counts=${stageCounts.toSeq.sorted.mkString(",")} " +
       s"scored=${scoredCounts.toSeq.sorted.mkString(",")}")
     bad.result()
@@ -193,7 +179,7 @@ final class Screen(seed: Long, nBulks: Int, work: Path, memo: Boolean) extends W
     val reason = s"no ${target.smiles} in [$lo, $hi] for ${Predict.minCol("cheap")}"
     val cheap = SurrogateModel("cheap")
     val expensive = SurrogateModel("expensive")
-    // the enumeration kernel alone, outside Spark: the cost behind items_per_s
+    // the enumeration kernel alone, outside Spark
     val (enumerated, secs) = seconds(
       BulkGen.bulks(seed, nBulks).filter(_.bulk_natoms <= maxSize).par.map(b => Enumerate.enumerateSlabs(b, cfg.maxMiller)).seq)
     enumerateSeconds = secs
@@ -223,33 +209,29 @@ final class Screen(seed: Long, nBulks: Int, work: Path, memo: Boolean) extends W
   }
 
   def layers(passes: Seq[Pass]): Map[String, Double] = {
-    def med(k: String) = Stats.median(passes.map(_.parts(k)))
     val counts = Map(
       "domain.bulks" -> "bulk_00_input",
       "domain.surfaces" -> "surf_01_best_shift",
       "domain.adslabs" -> "adslab_00_enumerated")
       .map { case (m, k) => m -> stageCounts.getOrElse(k, 0L).toDouble }
-    val timed = passes.head.parts.keys.map(k => k -> med(k)).toMap
-    if (!memo) timed ++ counts ++ scoredCounts + ("domain.enumerate_s" -> enumerateSeconds)
-    else timed ++ Map(
-      "memo.computed_rows_cold" -> labels.map(l => med(s"memo.cold_s.rows_$l")).sum,
-      "memo.computed_rows_warm" -> labels.map(l => med(s"memo.warm_s.rows_$l")).sum,
-      "memo.hit_ratio_warm" -> (1.0 - labels.map(l => med(s"memo.warm_s.rows_$l")).sum /
-        math.max(1L, memoKeys * labels.size)))
+    val parts = Workload.medianParts(passes)
+    parts ++ counts ++ scoredCounts ++ Map(
+      "domain.enumerate_s" -> enumerateSeconds,
+      "memo.hit_ratio_warm" -> (1.0 - parts("memo.computed_rows_warm") / math.max(1L, memoKeys)))
   }
+
+  private def deleteTree(dir: Path): Unit =
+    if (Files.exists(dir)) {
+      val s = Files.walk(dir)
+      try s.sorted(java.util.Comparator.reverseOrder()).forEach(p => Files.delete(p))
+      finally s.close()
+    }
 
   private def listFiles(dir: Path): Seq[Path] =
     if (!Files.exists(dir)) Nil
     else {
       val s = Files.walk(dir)
       try s.filter(Files.isRegularFile(_)).toArray.toSeq.map(_.asInstanceOf[Path])
-      finally s.close()
-    }
-
-  private def deleteTree(dir: Path): Unit =
-    if (Files.exists(dir)) {
-      val s = Files.walk(dir)
-      try s.sorted(java.util.Comparator.reverseOrder()).forEach(p => Files.delete(p))
       finally s.close()
     }
 }

@@ -7,14 +7,4 @@ object Stats {
     val n = s.size
     if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2
   }
-
-  /** Geometric mean over named operations of each one's median across
-    * passes: every operation weighs the same, however long it runs, so a
-    * slower small call moves it as much as a slower large one.
-    */
-  def gmeanOfMedians(passes: Seq[Map[String, Double]]): Double = {
-    val names = passes.flatMap(_.keys).distinct
-    require(names.nonEmpty, "no operations")
-    math.exp(names.map(n => math.log(median(passes.flatMap(_.get(n))))).sum / names.size)
-  }
 }

@@ -2,29 +2,24 @@ package graft.perfbench
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** What one timed pass over a workload's fixed work produced; `wall` is
-  * the sum of its timed windows.
+/** What one timed pass over a workload's fixed work produced.
   *
-  * @param ops         latency of each named call into the program
-  * @param parts       seconds (or counts) of each named part of the pass
-  * @param items       units of work the pass completed (adslabs, queries)
-  * @param itemSeconds the time those items took
+  * @param wall      sum of the pass's timed windows
+  * @param parts     seconds (or counts) of each named part of the pass
+  * @param attempted calls into the program the pass made
+  * @param failures  one entry per failed call or wrong output
   */
-case class Pass(wall: Double, ops: Map[String, Double], parts: Map[String, Double],
-                items: Double, itemSeconds: Double, attempted: Int, failures: Seq[String])
+case class Pass(wall: Double, parts: Map[String, Double], attempted: Int, failures: Seq[String])
 
 trait Workload {
-  /** Fewest timed passes whose median a single slow pass cannot set. */
-  def minPasses: Int = 2
   /** One repetition of the set-up a run needs before it can be timed. */
-  def setup(spark: SparkSession): Unit
-  /** One pass over the workload's fixed work. */
-  def pass(spark: SparkSession, trace: Trace, index: Int): Pass
+  def setup(spark: SparkSession, rep: Int): Unit
   /** Untimed output checks, run once after set-up; they also warm the JIT
     * and codegen caches before the timed passes. One entry per mismatch.
-    * A pass may check what only it produces, outside its timed windows.
     */
   def check(spark: SparkSession): Seq[String]
+  /** One pass over the workload's fixed work. */
+  def pass(spark: SparkSession, trace: Trace, index: Int): Pass
   /** Layer figures the workload itself measures (counts, kernel times). */
   def layers(passes: Seq[Pass]): Map[String, Double]
 }
@@ -40,4 +35,9 @@ object Workload {
     val v = body
     (v, (System.nanoTime() - t0) / 1e9)
   }
+
+  /** Median over passes of every named part. */
+  def medianParts(passes: Seq[Pass]): Map[String, Double] =
+    passes.flatMap(_.parts.keys).distinct
+      .map(k => k -> Stats.median(passes.map(_.parts.getOrElse(k, 0.0)))).toMap
 }

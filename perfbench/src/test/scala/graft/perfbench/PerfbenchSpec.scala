@@ -41,6 +41,14 @@ class PerfbenchSpec extends AnyFunSuite {
     }
   }
 
+  test("every registry key is a registry query with a manifest entry") {
+    val manifest = Registry.readManifest(Paths.get("manifest.tsv"))
+    assert(Registry.keys.distinct.size == Registry.keys.size)
+    assert(Registry.keys.forall(graft.SparkEntry.queries.contains))
+    assert(Registry.keys.toSet == manifest.keySet)
+    assert(Registry.packNames.nonEmpty && Registry.hot.nonEmpty)
+  }
+
   test("content digests ignore row order and last-bit double noise") {
     import org.apache.spark.sql.Row
     val a = Seq(Row("x", 0.1 + 0.2, Seq(2, 1)), Row("y", -0.0, Seq(3)))
